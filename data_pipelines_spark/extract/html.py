@@ -7,60 +7,22 @@ the parse-once-extract-many amortization but vectorizes it: ONE pandas UDF
 per purpose, processing an Arrow batch of pages per call and returning a wide
 struct — never 36 separate Python UDFs (Catalyst can't fuse opaque UDFs).
 
-Determinism contract: ``html_to_text`` is pure Python (stdlib ``HTMLParser``,
-no locale/env/library-version dependence), so extracted text is byte-identical
-on every replay — the per-row invariant from BASELINE.json ``input_hint``.
+Determinism contract: ``html_to_text`` is pure Python (compiled regexes + the
+stdlib entity table, no locale/env/library-version dependence), so extracted
+text is byte-identical on every replay — the per-row invariant from
+BASELINE.json ``input_hint``.
 """
 
 from __future__ import annotations
 
 import re
-from html.parser import HTMLParser
 
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_SKIP_TAGS = {"script", "style", "noscript", "template"}
 _WS_RE = re.compile(r"\s+")
-
-
-class _TextExtractor(HTMLParser):
-    """Collect visible text, skipping script/style subtrees."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.chunks: list[str] = []
-        self._skip_depth = 0
-
-    def handle_starttag(self, tag, attrs):
-        if tag in _SKIP_TAGS:
-            self._skip_depth += 1
-
-    def handle_endtag(self, tag):
-        if tag in _SKIP_TAGS and self._skip_depth > 0:
-            self._skip_depth -= 1
-
-    def handle_data(self, data):
-        if self._skip_depth == 0 and data.strip():
-            self.chunks.append(data)
-
-
-def _to_text_one_strict(html: bytes | str | None) -> str | None:
-    if html is None:
-        return None
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        html = bytes(html).decode("utf-8", errors="replace")
-    p = _TextExtractor()
-    try:
-        p.feed(html)
-        p.close()
-    except Exception:
-        pass  # keep whatever was collected — determinism over completeness
-    return _WS_RE.sub(" ", " ".join(p.chunks)).strip()
-
-
 _SKIP_BLOCK_RE = re.compile(
     r"<(script|style|noscript|template)\b[^>]*>.*?</\1\s*>", re.S | re.I
 )
@@ -90,17 +52,8 @@ def html_to_text(html: pd.Series) -> pd.Series:
     (``boxing/validators/blank_page.py:12-80``) and every field extractor's
     ``get_text()``. Byte-identical across replays by construction: pure
     regex + stdlib entity table, no library/locale/env dependence.
-    (The hot path strips tags with compiled regexes — ~10× the throughput of
-    the event-driven parser kept below as ``html_to_text_strict``.)
     """
     return html.map(_to_text_one)
-
-
-@F.pandas_udf(T.StringType())
-def html_to_text_strict(html: pd.Series) -> pd.Series:
-    """Event-parser variant (stdlib HTMLParser): handles pathological markup
-    (unclosed scripts, tags inside attributes) more faithfully; slower."""
-    return html.map(_to_text_one_strict)
 
 
 # ---------------------------------------------------------------------------

@@ -42,8 +42,8 @@ with one ``groupBy(groups).sum()`` over O(n_batches × n_groups) rows, and
 no read-modify-write of view state on the update path, so updates from
 concurrent-looking retries can never double-apply or half-apply.
 
-Exactly-once follows the engine-wide ledger discipline (lake/table.py,
-operators/incremental.py): a batch's delta partition is written with dynamic
+Exactly-once follows the marker ledger shared with the near-dup indexes
+(lake/ledger.py): a batch's delta partition is written with dynamic
 partition overwrite FIRST and its ledger marker LAST; reads filter to
 marked batches, so a crash-retried update overwrites its own partial files
 invisibly and re-marks. :meth:`update` is idempotent per ``batch_id``.
@@ -69,6 +69,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from data_pipelines_spark.functions.hashing import bucket_id
+from data_pipelines_spark.lake.ledger import MarkerLedger
 from data_pipelines_spark.lake.table import ChangeLogUnavailableError, LakeTable
 
 _AGG_KINDS = ("sum", "avg", "min", "max", "recompute")
@@ -145,8 +146,7 @@ class AggView:
         if bad:
             raise ValueError(f"reserved/colliding column names: {sorted(bad)}")
         self._deltas = os.path.join(root, "deltas")
-        self._ledger_dir = os.path.join(root, "_ledger")
-        os.makedirs(self._ledger_dir, exist_ok=True)
+        self._ledger = MarkerLedger(root)
 
     # ------------------------------------------------------------- lifecycle
 
@@ -189,25 +189,19 @@ class AggView:
 
     # ------------------------------------------------------------- ledger
 
-    def _marker(self, batch_id) -> str:
-        return os.path.join(self._ledger_dir, f"{batch_id}.json")
-
     def committed_batches(self) -> list[str]:
-        return sorted(
-            f[: -len(".json")]
-            for f in os.listdir(self._ledger_dir)
-            if f.endswith(".json")
-        )
-
-    def _absorbed(self) -> set[str]:
-        out: set[str] = set()
-        for b in self.committed_batches():
-            with open(self._marker(b)) as f:
-                out.update(json.load(f).get("absorbs", []))
-        return out
+        return self._ledger.live()
 
     def is_committed(self, batch_id) -> bool:
-        return os.path.exists(self._marker(str(batch_id))) or str(batch_id) in self._absorbed()
+        return self._ledger.is_committed(batch_id)
+
+    def _applied_v(self, batches) -> int:
+        """Highest table version recorded by the markers of ``batches``
+        (-1 if none records one)."""
+        return max(
+            (self._ledger.meta(b).get("table_version", -1) for b in batches),
+            default=-1,
+        )
 
     def _stored_schema(self) -> StructType | None:
         """Read schema = the schema of the LATEST-applied batch (schema only
@@ -217,9 +211,8 @@ class AggView:
         table_version (mtime as the tiebreak for markers without one)."""
         best: tuple[int, float, dict] | None = None
         for b in self.committed_batches():
-            path = self._marker(b)
-            with open(path) as f:
-                m = json.load(f)
+            path = self._ledger.path(b)
+            m = self._ledger.meta(b)
             if m.get("schema") is None:
                 continue
             rank = (int(m.get("table_version", -1)), os.path.getmtime(path), m)
@@ -381,10 +374,8 @@ class AggView:
         if bid not in tl:
             raise ValueError(f"batch {bid!r} is not committed to the source table")
         post_v = tl[bid]
-        marker = self._marker(bid)
-        if os.path.exists(marker):
-            with open(marker) as f:
-                seen_v = json.load(f).get("table_version")
+        if os.path.exists(self._ledger.path(bid)):
+            seen_v = self._ledger.meta(bid).get("table_version")
             if seen_v is not None and seen_v != post_v:
                 raise ValueError(
                     f"batch {bid!r} was re-committed at v{post_v} after a "
@@ -392,7 +383,7 @@ class AggView:
                     "the view to re-baseline"
                 )
             return False
-        if bid in self._absorbed():
+        if bid in self._ledger.absorbed():
             return False
         # the pre-image version is the commit's PARENT snapshot — on a
         # branch-enabled table version slots are global, so arithmetic
@@ -407,8 +398,8 @@ class AggView:
             log = table.change_log(pre_v, post_v)
             touched = log.select(key).distinct()
         except ChangeLogUnavailableError:
-            # CoW merges fold deltas into base files; the snapshot diff
-            # still yields the touched keys (O(affected buckets), not O(batch))
+            # fold-into-base commits (overwrite / rollback / backfill) have
+            # no delta rows; the snapshot diff still yields the touched keys
             touched = table.changes(pre_v, post_v).select(key).distinct()
         # the touched-key frame can be referenced several times below (the
         # layout-fallback bucket probe + the pre/post semi-joins) and Spark
@@ -530,8 +521,7 @@ class AggView:
         if pinned is not None:
             pinned.unpersist()
         schema = StructType([f for f in delta.schema.fields if f.name != "batch_id"])
-        with open(self._marker(bid), "w") as f:
-            json.dump({"table_version": post_v, "schema": schema.jsonValue()}, f)
+        self._ledger.commit(bid, {"table_version": post_v, "schema": schema.jsonValue()})
         return True
 
     def update_all(self, table: LakeTable) -> int:
@@ -550,10 +540,7 @@ class AggView:
             # through the highest table_version its markers record; any
             # trimmed entry above that point is lost history the ledger can
             # no longer name
-            applied_v = -1
-            for b in self.committed_batches():
-                with open(self._marker(b)) as f:
-                    applied_v = max(applied_v, json.load(f).get("table_version", -1))
+            applied_v = self._applied_v(self.committed_batches())
             if applied_v < floor:
                 raise ValueError(
                     f"table ledger was trimmed through v{floor} "
@@ -571,7 +558,7 @@ class AggView:
     # ------------------------------------------------------------- read
 
     def _delta_rows(self) -> DataFrame | None:
-        absorbed = self._absorbed()
+        absorbed = self._ledger.absorbed()
         live = [b for b in self.committed_batches() if b not in absorbed]
         if not live:
             return None
@@ -671,22 +658,12 @@ class AggView:
             .partitionBy("batch_id")
             .parquet(self._deltas)
         )
-        absorbed = sorted(
-            set(self.committed_batches()) | set(map(str, table.ledger()))
-        )
         schema = StructType([f for f in folded.schema.fields if f.name != "batch_id"])
-        with open(self._marker(cid), "w") as f:
-            json.dump(
-                {"absorbs": absorbed, "schema": schema.jsonValue(),
-                 "table_version": version},
-                f,
-            )
-        for b in absorbed:
-            if b != cid:
-                try:
-                    os.remove(self._marker(b))
-                except FileNotFoundError:
-                    pass
+        self._ledger.commit_compaction(
+            cid,
+            set(self.committed_batches()) | set(map(str, table.ledger())),
+            {"schema": schema.jsonValue(), "table_version": version},
+        )
 
     # ------------------------------------------------------------- compact
 
@@ -698,7 +675,7 @@ class AggView:
         first, its marker (carrying ``absorbs``) last; absorbed markers are
         deleted after, and a crash between leaves reads correct because
         ``absorbs`` masks them."""
-        absorbed = self._absorbed()
+        absorbed = self._ledger.absorbed()
         live = [b for b in self.committed_batches() if b not in absorbed]
         if len(live) <= 1:
             return False
@@ -721,21 +698,9 @@ class AggView:
         # carry the catch-up watermark forward: the consolidated marker must
         # still prove how far this view has applied (update_all's
         # ledger_floor guard reads it) after the absorbed markers are gone
-        maxv = -1
-        for b in live:
-            try:
-                with open(self._marker(b)) as f:
-                    maxv = max(maxv, json.load(f).get("table_version", -1))
-            except FileNotFoundError:
-                pass
-        doc = {"absorbs": live, "schema": schema.jsonValue()}
+        doc = {"schema": schema.jsonValue()}
+        maxv = self._applied_v(live)
         if maxv >= 0:
             doc["table_version"] = maxv
-        with open(self._marker(cid), "w") as f:
-            json.dump(doc, f)
-        for b in live:
-            try:
-                os.remove(self._marker(b))
-            except FileNotFoundError:
-                pass
+        self._ledger.commit_compaction(cid, live, doc)
         return True

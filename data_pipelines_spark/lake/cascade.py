@@ -23,7 +23,7 @@ Scale shape: each hop is one delta-merge job over ONE upstream commit's
 delta files — the downstream per-batch floor equals the upstream's, and a
 lagging cascade catching up over k commits runs k bounded jobs rather than
 one unbounded table diff. Upstream commits that fold changes into base
-files (copy-on-write merges, rollback, backfill) have no delta rows — the
+files (overwrite, rollback, backfill) have no delta rows — the
 cascade surfaces :class:`ChangeLogUnavailableError` and the remedy is
 :meth:`Cascade.rebuild` (same contract as ``AggView.rebuild`` after a
 backfill). Upstream ``expire_snapshots`` retention bounds how far back a
@@ -34,11 +34,11 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipelines_spark.lake.ledger import write_json_atomic
 from data_pipelines_spark.lake.table import LakeTable, MergeStats
 
 
@@ -91,15 +91,10 @@ class Cascade:
 
     def _write_marker(self, version: int) -> None:
         os.makedirs(os.path.dirname(self._marker_path), exist_ok=True)
-        tmp = self._marker_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"upstream_version": version, "upstream_root": self.upstream.root},
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._marker_path)
+        write_json_atomic(
+            self._marker_path,
+            {"upstream_version": version, "upstream_root": self.upstream.root},
+        )
 
     # --------------------------------------------------------------- sync
 
@@ -176,8 +171,8 @@ class Cascade:
         """Full re-sync via downstream ``INSERT OVERWRITE``: replace the
         downstream state with the transformed upstream CURRENT state
         (tombstones carried, sequences untouched) — the remedy after a
-        fold-into-base upstream commit (CoW merge / backfill / rollback /
-        overwrite) or expired lag. Because overwrite does not consult the
+        fold-into-base upstream commit (backfill / rollback / overwrite) or
+        expired lag. Because overwrite does not consult the
         downstream's stored sequences, this converges even when the
         downstream is "ahead" (upstream rolled back) — the one case a
         merge-based rebuild could never fix. Exactly-once per upstream

@@ -19,8 +19,7 @@ Scale design (targets a 1000-executor cluster over ~100 TB):
   a follow-up commit — the per-bucket stagger keeps steady-state batches
   compacting ~1/stagger of the buckets instead of all at once. Ingest cost
   is therefore independent of table size; read amplification is bounded by
-  ``compact_threshold + compact_stagger - 1``. (``strategy="cow"`` forces
-  the classic join-rewrite merge for comparison.)
+  ``compact_threshold + compact_stagger - 1``.
 - **Partition pruning**: both deltas and compaction touch only the hash
   buckets present in the batch. ``n_buckets`` is the scale knob — 16
   locally, thousands in production.
@@ -42,7 +41,7 @@ analog): the snapshot file's exclusive create is the commit CAS — exactly
 one writer can ever own version N. A loser's data files are already on
 disk, so it rebases metadata-only onto the winner's snapshot and retries
 (``commit_retries``): LWW delta merges commute with any commit and always
-rebase; rewrite commits (compact / CoW / vacuum / backfill) revalidate
+rebase; rewrite commits (compact / vacuum / backfill) revalidate
 their read set (the rewritten buckets' file lists must be untouched) and
 fail loud otherwise; rebucket / rollback never rebase. A writer that
 crashes between creating its snapshot file and moving CURRENT leaves the
@@ -76,6 +75,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_pipelines_spark.functions.hashing import bucket_id
+from data_pipelines_spark.lake.ledger import write_json_atomic
 
 _BUCKET_COL = "_bucket"
 DELETED_COL = "_deleted"
@@ -88,8 +88,9 @@ class ConcurrentCommitError(RuntimeError):
 
 class ChangeLogUnavailableError(RuntimeError):
     """change_log() cannot reconstruct row-level deltas for this version
-    range (copy-on-write merge folded them into rewritten base files, or a
-    legacy commit lacks the operation tag). ``changes()`` always works."""
+    range (a fold-into-base commit — overwrite, rollback, backfill — has no
+    delta rows, or a legacy commit lacks the operation tag). ``changes()``
+    always works."""
 
 
 class SchemaEvolutionError(ValueError):
@@ -413,13 +414,9 @@ class LakeTable:
 
     def _write_manifest(self, version: int, append: bool, files: dict) -> str:
         name = f"m{version}-{uuid.uuid4().hex[:8]}.json"
-        path = os.path.join(self._meta_dir, name)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"append": append, "files": files}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
+        write_json_atomic(
+            os.path.join(self._meta_dir, name), {"append": append, "files": files}
+        )
         return name
 
     def _load_manifest(self, name: str) -> dict:
@@ -491,13 +488,7 @@ class LakeTable:
             return {k: int(v) for k, v in json.load(f).items()}
 
     def _write_refs(self, refs: dict[str, int]) -> None:
-        p = self._refs_path()
-        tmp = p + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(refs, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, p)
+        write_json_atomic(self._refs_path(), refs)
 
     def create_tag(self, name: str, version: int | None = None) -> int:
         """Pin a snapshot under ``name`` (default: the current version).
@@ -732,7 +723,7 @@ class LakeTable:
         same guarantee through the bump-resolution read path. Reorg commits
         (compact/vacuum) carry no logical change and are skipped; explicit
         schema-update commits re-apply; fold-into-base commits on the
-        branch (CoW merge / overwrite / rollback / backfill) cannot be
+        branch (overwrite / rollback / backfill) cannot be
         replayed row-wise and refuse loud. Rebase publish is batch-atomic,
         not all-or-nothing: a crash mid-way leaves a prefix published —
         rerun to complete (the ledger skips what landed). Cost: O(changes
@@ -1179,7 +1170,7 @@ class LakeTable:
         """Net row-level change feed between two snapshots (CDC-out).
 
         Snapshot-diff semantics (the general path — works across ANY commit
-        mix: merges, copy-on-write, compaction, vacuum, schema evolution):
+        mix: merges, rewrites, compaction, vacuum, schema evolution):
         full-outer-join the live states at the two versions on the key and
         classify each key by its sequence tuple —
 
@@ -1302,11 +1293,6 @@ class LakeTable:
                 added.extend((v, fe) for fe in new)
             elif op in ("compact", "vacuum", "schema-update", "rebucket"):
                 pass  # physical/metadata reorganizations: no logical deltas
-            elif op == "merge-cow":
-                raise ChangeLogUnavailableError(
-                    f"v{v} is a copy-on-write merge; row-level deltas were "
-                    "folded into rewritten base files — use changes()"
-                )
             elif op == "rollback":
                 raise ChangeLogUnavailableError(
                     f"v{v} is a rollback/restore; the range's net row-level "
@@ -1369,7 +1355,6 @@ class LakeTable:
         self,
         batch_df: DataFrame,
         batch_id: int | str,
-        strategy: str = "delta",
         transform_after_dedup=None,
         salt_dedup: int = 0,
     ) -> MergeStats:
@@ -1381,9 +1366,8 @@ class LakeTable:
         stored sequences. Re-delivered ``batch_id``s are skipped via the
         snapshot ledger (exactly-once).
 
-        ``strategy='delta'`` (default) appends delta files — O(batch) work —
-        and compacts buckets past ``compact_threshold``. ``strategy='cow'``
-        does the classic read-join-rewrite of every affected bucket.
+        The winners are appended as delta files — O(batch) work — and
+        buckets past ``compact_threshold`` are compacted.
 
         ``transform_after_dedup`` (df → df) runs expensive derivations (e.g.
         html→text decode UDFs) on the deduped winners only — losers and
@@ -1441,47 +1425,12 @@ class LakeTable:
         )
         table_schema, evolved = self._evolve_schema(snap, payload_schema)
         stats.schema_evolved = evolved and snap["current_schema_id"] is not None
-        if strategy == "delta":
-            # single-job fast path: write the deltas, derive every stat from
-            # the written files' footers driver-side (no pre-agg job, no
-            # persist) — the per-batch floor is one Spark job.
-            return self._merge_delta(deduped, stats, base_version, snap, table_schema)
-        deduped = deduped.persist()
-        try:
-            # ONE pre-merge job: affected buckets + row/delete counts + span
-            # (collect bounded by n_buckets — driver-safe at any data scale)
-            tie = self.seq_cols[-1]
-            pre = (
-                deduped.groupBy(_BUCKET_COL)
-                .agg(
-                    F.count("*").alias("rows"),
-                    F.sum((F.col("op") == "D").cast("long")).alias("deletes"),
-                    F.min(tie).alias("lo"),
-                    F.max(tie).alias("hi"),
-                )
-                .collect()
-            )
-            affected = [r[_BUCKET_COL] for r in pre]
-            stats.buckets_touched = len(affected)
-            stats.rows_in = sum(r["rows"] for r in pre)
-            n_deletes = sum(int(r["deletes"] or 0) for r in pre)
-            stats.rows_upserted = stats.rows_in - n_deletes
-            stats.rows_deleted = n_deletes
-            if pre:
-                stats.seq_min = min(r["lo"] for r in pre)
-                stats.seq_max = max(r["hi"] for r in pre)
-            for r in pre:  # delta accounting: rows appended per bucket
-                stats.per_bucket[int(r[_BUCKET_COL])] = {
-                    "rows": r["rows"],
-                    "tombstones": int(r["deletes"] or 0),
-                }
-            if not affected:
-                return self._commit(snap, base_version, {}, stats, table_schema, append=False, operation="merge-cow")
-            return self._merge_cow(deduped, stats, base_version, snap, table_schema, affected)
-        finally:
-            deduped.unpersist()
+        # write the deltas, then read every stat from the written files'
+        # footers in this process (no pre-agg job, no persist) — the
+        # per-batch floor is one Spark job.
+        return self._merge_delta(deduped, stats, base_version, snap, table_schema)
 
-    # -------------------------------------------------------- delta strategy
+    # ------------------------------------------------------------ delta write
 
     def _merge_delta(self, deduped, stats, base_version, snap, table_schema):
         to_write = self._align(
@@ -1831,73 +1780,6 @@ class LakeTable:
         return live.where(pred).select(
             F.lit("U").alias("op"), F.col(self.key), *seq_exprs, *payload
         )
-
-    # ---------------------------------------------------------- cow strategy
-
-    def _merge_cow(self, deduped, stats, base_version, snap, table_schema, affected):
-        phys = self._phys_schema(table_schema, "base")
-        snap_files = self._resolve_files(snap)
-        have_data = snap["current_schema_id"] is not None and any(
-            snap_files.get(str(b)) for b in affected
-        )
-        if have_data:
-            current = self.read(version=base_version, buckets=affected, include_tombstones=True)
-            current = self._align_keep(current, phys)
-        else:
-            current = self.spark.createDataFrame([], phys)
-
-        new_side = self._align(
-            deduped.drop(_BUCKET_COL),
-            T.StructType(list(table_schema.fields) + [T.StructField("op", T.StringType(), True)]),
-        )
-        c, n = current.alias("c"), new_side.alias("n")
-        joined = c.join(n, on=F.col(f"c.{self.key}") == F.col(f"n.{self.key}"), how="full_outer")
-        c_seq = F.struct(*[F.col(f"c.{s}") for s in self.seq_cols])
-        n_seq = F.struct(*[F.col(f"n.{s}") for s in self.seq_cols])
-        take_new = F.col(f"n.{self.key}").isNotNull() & (
-            F.col(f"c.{self.key}").isNull() | (n_seq >= c_seq)
-        )
-        # seq-bump winners (op='B', payload-free) advance the sequence but
-        # KEEP the current row's payload — without this branch a winning
-        # bump would overwrite content with its NULLs (and the COW rewrite
-        # would make that loss permanent). An unmaterializable bump (no
-        # current row, or current is a tombstone) resolves to a tombstone,
-        # matching lww_resolve_bumps on the merge-on-read path.
-        take_bump = take_new & (F.col("n.op") == F.lit("B"))
-        out_cols = []
-        for f_ in table_schema.fields:
-            if f_.name in self.seq_cols:
-                col = F.when(take_new, F.col(f"n.{f_.name}")).otherwise(
-                    F.col(f"c.{f_.name}")
-                )
-            else:
-                col = (
-                    F.when(take_bump, F.col(f"c.{f_.name}"))
-                    .when(take_new, F.col(f"n.{f_.name}"))
-                    .otherwise(F.col(f"c.{f_.name}"))
-                )
-            out_cols.append(col.alias(f_.name))
-        out_cols.append(
-            F.when(
-                take_bump,
-                F.coalesce(F.col(f"c.{DELETED_COL}"), F.lit(True)),
-            )
-            .when(take_new, F.col("n.op") == F.lit("D"))
-            .otherwise(F.coalesce(F.col(f"c.{DELETED_COL}"), F.lit(False)))
-            .alias(DELETED_COL)
-        )
-        result = joined.select(*out_cols).withColumn(
-            _BUCKET_COL, bucket_id(F.col(self.key), self.n_buckets)
-        )
-        commit_dir = self._new_commit_dir(base_version)
-        self._write_partitioned(result, commit_dir, len(affected))
-        new_files = self._list_written(commit_dir, snap, table_schema, stats, kind="base")
-        self._acct_written(commit_dir, stats, kind="base", new_files=new_files)
-        return self._commit(snap, base_version, new_files, stats, table_schema, append=False, operation="merge-cow")
-
-    def _align_keep(self, df: DataFrame, phys: T.StructType) -> DataFrame:
-        """Align a read() output (already has _deleted) to a physical schema."""
-        return self._align(df, phys)
 
     # ------------------------------------------------------------ compaction
 
@@ -2341,7 +2223,7 @@ class LakeTable:
         - **append commits** (delta merge / schema-update) commute with any
           commit under LWW — the delta is a pure function of the batch, so
           the rebase equals running the merge after the winner sequentially;
-        - **rewrite commits** (compact / merge-cow / backfill / vacuum)
+        - **rewrite commits** (compact / backfill / vacuum)
           were computed FROM the base file set, so every bucket they replace
           must be byte-identical between old and new base (read-set
           validation) — concurrent appends to OTHER buckets are inherited;
@@ -2424,7 +2306,7 @@ class LakeTable:
         new_snap["version"] = self._alloc_slot(base_version)
         new_snap["parent"] = base_version
         # commit kind (Iceberg snapshot `operation` analog): lets readers
-        # distinguish logical changes (merge / merge-cow) from physical
+        # distinguish logical changes (merge) from physical
         # reorganizations (compact / vacuum / schema-update) — change_log()
         # relies on this to skip reorganizations instead of refusing them
         new_snap["operation"] = operation

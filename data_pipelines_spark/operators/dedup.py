@@ -91,25 +91,6 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def minhash_signature_expr(shingles: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """Pure-JVM MinHash signature (fold with a k-lane accumulator).
-
-    Semantically identical to the default pandas path but generates a very
-    large expression — Janino compile cost grows with ``num_hashes`` (minutes
-    at k=64 on first use), so it's kept as a reference implementation; the
-    production path is :func:`minhash_signature`.
-    """
-    seeds = F.sequence(F.lit(seed), F.lit(seed + num_hashes - 1))
-    init = F.array_repeat(F.lit((1 << 63) - 1).cast("long"), num_hashes)
-    return F.aggregate(
-        shingles,
-        init,
-        lambda acc, s: F.zip_with(
-            acc, F.transform(seeds, lambda i: F.xxhash64(s, i)), lambda a, b: F.least(a, b)
-        ),
-    )
-
-
 def _affine_coeffs(num_hashes: int, seed: int):
     import numpy as np
 

@@ -38,7 +38,8 @@ Scale shape (the 100 TB story):
   partition overwrite + a ledger marker written LAST: a re-delivered or
   crash-retried batch overwrites its own partitions and store reads filter
   to ledger-committed batches, so the index is exactly-once like every
-  other commit path in this engine (lake/table.py ledger discipline).
+  other commit path in this engine (the marker ledger in lake/ledger.py,
+  shared with AggView).
 """
 
 from __future__ import annotations
@@ -50,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_pipelines_spark.lake.ledger import MarkerLedger, write_json_atomic
 from data_pipelines_spark.operators.dedup import (
     bucket_pairs,
     bucketed_vector_pairs,
@@ -73,39 +75,33 @@ class _BatchStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        os.makedirs(os.path.join(root, "_ledger"), exist_ok=True)
+        self._ledger = MarkerLedger(root)
 
     # ------------------------------------------------------------- ledger
 
-    def _marker(self, batch_id) -> str:
-        return os.path.join(self.root, "_ledger", f"{batch_id}.json")
-
     def committed_batches(self) -> list[str]:
-        """Live marker ids — the batch partitions store reads scan. A
-        compacted (absorbed) batch's marker is gone; its rows live on under
-        the compaction's own batch id."""
-        d = os.path.join(self.root, "_ledger")
-        return sorted(
-            f[: -len(".json")]
-            for f in os.listdir(d)
-            # "_"-prefixed ledger files are control records (_expired.json),
-            # not batch markers
-            if f.endswith(".json") and not f.startswith("_")
-        )
-
-    def _absorbed(self) -> set[str]:
-        out: set[str] = set()
-        for b in self.committed_batches():
-            with open(self._marker(b)) as f:
-                out.update(json.load(f).get("absorbs", []))
-        return out
+        """Live marker ids — the batch partitions store reads scan."""
+        return self._ledger.live()
 
     def is_committed(self, batch_id) -> bool:
         """True for any batch ever committed — live marker or absorbed into
         a compaction (kept/dups partitions survive compaction precisely so
         an absorbed batch can still replay its recorded kept set)."""
-        b = str(batch_id)
-        return os.path.exists(self._marker(b)) or b in self._absorbed()
+        return self._ledger.is_committed(batch_id)
+
+    def _commit(self, batch_id: str, schemas: dict[str, StructType], **extra) -> None:
+        """Marker LAST — the commit point. It records the write schemas so
+        store reads never rely on footer inference (a zero-dup or empty
+        batch writes no parquet files at all)."""
+        self._ledger.commit(
+            batch_id,
+            {
+                "batch_id": batch_id,
+                "epoch": self._next_epoch(),
+                **extra,
+                "schemas": {sub: sch.jsonValue() for sub, sch in schemas.items()},
+            },
+        )
 
     def _partition_dir(self, sub: str, batch_id: str) -> str | None:
         """On-disk directory of one batch's partition under ``sub`` — or
@@ -130,10 +126,6 @@ class _BatchStore:
 
     # ------------------------------------------------------------- epochs
 
-    def _marker_meta(self, batch_id: str) -> dict:
-        with open(self._marker(batch_id)) as f:
-            return json.load(f)
-
     def _epochs(self) -> dict[str, int]:
         """Live batch_id → commit epoch (a monotone counter stamped into
         every marker; a compaction's epoch is the max of what it absorbed).
@@ -143,7 +135,7 @@ class _BatchStore:
         position in sorted-id order (correct for the common 0,1,2,… ids)."""
         out: dict[str, int] = {}
         for i, b in enumerate(self.committed_batches()):
-            out[b] = int(self._marker_meta(b).get("epoch", i + 1))
+            out[b] = int(self._ledger.meta(b).get("epoch", i + 1))
         return out
 
     def _next_epoch(self) -> int:
@@ -184,17 +176,7 @@ class _BatchStore:
             )
         out = df.distinct().select("id", F.lit(batch_id).alias("batch_id"))
         self._overwrite(out, os.path.join(self.root, "retracted"), ["batch_id"])
-        epoch = self._next_epoch()  # BEFORE open("w") creates the marker
-        with open(self._marker(batch_id), "w") as f:
-            json.dump(
-                {
-                    "batch_id": batch_id,
-                    "epoch": epoch,
-                    "retract": True,
-                    "schemas": {"retracted": out.schema.jsonValue()},
-                },
-                f,
-            )
+        self._commit(batch_id, {"retracted": out.schema}, retract=True)
         return {"batch_id": batch_id, "replayed": False}
 
     def _live_retractions(self) -> DataFrame | None:
@@ -206,7 +188,7 @@ class _BatchStore:
         retr = [
             b
             for b in epochs
-            if self._marker_meta(b).get("retract")
+            if self._ledger.meta(b).get("retract")
             # an EMPTY retraction (e.g. an all-insert pipeline batch) wrote
             # no partition files at all — skip it driver-side so it costs
             # no hide-set join, not even an empty one
@@ -259,8 +241,7 @@ class _BatchStore:
         inference — a committed batch may have written ZERO files (no dups,
         empty batch) and dynamic partition overwrite emits no footers then."""
         for batch_id in reversed(self.committed_batches()):
-            with open(self._marker(batch_id)) as f:
-                schemas = json.load(f).get("schemas", {})
+            schemas = self._ledger.meta(batch_id).get("schemas", {})
             if sub in schemas:
                 return StructType.fromJson(schemas[sub])
         return None
@@ -278,7 +259,7 @@ class _BatchStore:
         batches folded into a compaction — valid only for the per-batch
         record tables (``kept``/``dups``), whose partitions survive
         compaction; bulk partitions are deleted when absorbed."""
-        absorbed = self._absorbed()
+        absorbed = self._ledger.absorbed()
         committed = [b for b in self.committed_batches() if b not in absorbed]
         if include_absorbed:
             committed = sorted(set(committed) | absorbed)
@@ -302,8 +283,11 @@ class _BatchStore:
         Batches expired via :meth:`expire_replay` no longer contribute."""
         return self._read_part("dups", include_absorbed=True)
 
+    def _expired_path(self) -> str:
+        return os.path.join(self._ledger.dir, "_expired.json")
+
     def _expired(self) -> set[str]:
-        path = os.path.join(self.root, "_ledger", "_expired.json")
+        path = self._expired_path()
         if not os.path.exists(path):
             return set()
         with open(path) as f:
@@ -326,19 +310,14 @@ class _BatchStore:
         import shutil
 
         ids = {str(b) for b in batch_ids}
-        absorbed = self._absorbed()
+        absorbed = self._ledger.absorbed()
         live = set(self.committed_batches())
         bad = sorted((ids - absorbed) | (ids & live))
         if bad:
             raise ValueError(
                 f"only absorbed (compacted-away) batches can be expired: {bad}"
             )
-        path = os.path.join(self.root, "_ledger", "_expired.json")
-        merged = sorted(self._expired() | ids)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(merged, f)
-        os.replace(tmp, path)
+        write_json_atomic(self._expired_path(), sorted(self._expired() | ids))
         removed = 0
         for b in ids:
             for sub in ("kept", "dups"):
@@ -413,9 +392,8 @@ class _BatchStore:
         # sweep any absorbed-but-present leftovers from a prior crash
         # ("retracted" partitions of absorbed retractions are fully applied
         # by the compaction that absorbed them — never needed again)
-        for b in self._absorbed():
-            if os.path.exists(self._marker(b)):
-                os.remove(self._marker(b))
+        for b in self._ledger.absorbed():
+            self._ledger.drop(b)
             for sub in (*self._bulk_subs, "retracted"):
                 d = self._partition_dir(sub, b)
                 if d is not None:
@@ -457,32 +435,24 @@ class _BatchStore:
             shutil.rmtree(dst, ignore_errors=True)
             os.rename(os.path.join(tmp, sub), dst)
         shutil.rmtree(tmp, ignore_errors=True)
-        # every batch this compaction replaces, transitively (a compact id
-        # in `live` contributes its own absorbs so replay works forever)
-        absorbs = set(live)
-        for b in live:
-            with open(self._marker(b)) as f:
-                absorbs.update(json.load(f).get("absorbs", []))
         schemas = {sub: s.jsonValue() for sub, s in bulk_schemas.items()}
         for sub in ("kept", "dups"):
             s = self._stored_schema(sub)
             if s is not None:
                 schemas[sub] = s.jsonValue()
-        with open(self._marker(cid), "w") as f:
-            json.dump(
-                {
-                    "batch_id": cid,
-                    # max of what it absorbed: later commits (and later
-                    # retractions) still order strictly after every row
-                    # this consolidation carries
-                    "epoch": max(epochs.values()),
-                    "absorbs": sorted(absorbs),
-                    "schemas": schemas,
-                },
-                f,
-            )
+        absorbs = self._ledger.commit_compaction(
+            cid,
+            live,
+            {
+                "batch_id": cid,
+                # max of what it absorbed: later commits (and later
+                # retractions) still order strictly after every row
+                # this consolidation carries
+                "epoch": max(epochs.values()),
+                "schemas": schemas,
+            },
+        )
         for b in live:
-            os.remove(self._marker(b))
             for sub in (*self._bulk_subs, "retracted"):
                 d = self._partition_dir(sub, b)
                 if d is not None:
@@ -751,24 +721,15 @@ class MinHashIndex(_BatchStore):
             F.pmod(F.xxhash64(F.col("id")), F.lit(self.n_parts)).alias("spart"),
         )
         self._overwrite(sh_out, os.path.join(self.root, "shingles"), ["batch_id", "spart"])
-        # marker LAST — the commit point. It also records the write schemas so
-        # store reads never rely on footer inference (a zero-dup or empty
-        # batch writes no parquet files at all).
-        epoch = self._next_epoch()  # BEFORE open("w") creates the marker
-        with open(self._marker(batch_id), "w") as f:
-            json.dump(
-                {
-                    "batch_id": batch_id,
-                    "epoch": epoch,
-                    "schemas": {
-                        "dups": dups_out.schema.jsonValue(),
-                        "kept": kept_out.schema.jsonValue(),
-                        "bands": bands_out.schema.jsonValue(),
-                        "shingles": sh_out.schema.jsonValue(),
-                    },
-                },
-                f,
-            )
+        self._commit(
+            batch_id,
+            {
+                "dups": dups_out.schema,
+                "kept": kept_out.schema,
+                "bands": bands_out.schema,
+                "shingles": sh_out.schema,
+            },
+        )
 
         out = batch.join(
             self._read("kept", kept_out.schema)
@@ -1101,20 +1062,14 @@ class EmbeddingIndex(_BatchStore):
             F.pmod(F.col("bucket"), F.lit(self.n_parts)).alias("bpart"),
         )
         self._overwrite(vec_out, os.path.join(self.root, "vectors"), ["batch_id", "bpart"])
-        epoch = self._next_epoch()  # BEFORE open("w") creates the marker
-        with open(self._marker(batch_id), "w") as f:
-            json.dump(
-                {
-                    "batch_id": batch_id,
-                    "epoch": epoch,
-                    "schemas": {
-                        "dups": dups_out.schema.jsonValue(),
-                        "kept": kept_out.schema.jsonValue(),
-                        "vectors": vec_out.schema.jsonValue(),
-                    },
-                },
-                f,
-            )
+        self._commit(
+            batch_id,
+            {
+                "dups": dups_out.schema,
+                "kept": kept_out.schema,
+                "vectors": vec_out.schema,
+            },
+        )
 
         out = batch.join(
             self._read("kept", kept_out.schema)

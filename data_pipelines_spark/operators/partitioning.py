@@ -1,9 +1,8 @@
-"""Partitioning utilities: parallelism guards and skew salting helpers."""
+"""Partitioning utilities: the parallelism guard for UDF-heavy operators."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -28,10 +27,3 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         return df.repartition(want)
     return df
 
-
-def with_salt(df: DataFrame, n_salts: int, cols: list[str] | None = None) -> DataFrame:
-    """Add a deterministic ``_salt`` column spreading hot keys across
-    ``n_salts`` reducers (hash of ``cols``, or of the whole row position-free
-    via all columns)."""
-    basis = [F.col(c) for c in (cols or df.columns)]
-    return df.withColumn("_salt", F.pmod(F.xxhash64(*basis), F.lit(n_salts)))

@@ -181,12 +181,6 @@ def derived_total(total_col: str, part_cols: Sequence[str]) -> Check:
     return (f"derived_{total_col}", fn)
 
 
-def row_count_reconciliation(source: DataFrame, target: DataFrame) -> bool:
-    """K6: publish verification — source vs target row counts
-    (``deploy/preview.py:172-207``)."""
-    return source.count() == target.count()
-
-
 def staging_validation_suite(divisions: DataFrame, as_of: str | None = None):
     """The reference's post-load data-quality suite over the staging shape
     (``boxing/database/validators/queries.py:244-280``): key/slug

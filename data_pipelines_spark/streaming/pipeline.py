@@ -45,7 +45,6 @@ class PipelineConfig:
     extract_fields: bool = False  # add the wide-struct page-field extraction
     change_filter: bool = False  # hash-unchanged re-scrapes → seq-bump deltas
     salt_dedup: int = 0  # >1: two-phase salted dedup against hot-key skew
-    merge_partitions: int | None = None  # repartition width ahead of the merge
     near_dup_threshold: float | None = None  # near-dup-on-ingest Jaccard cutoff
     near_dup_retract: bool = False  # deletes/rewrites retract old index content
     compact_sort_by_seq: bool = False  # auto-compactions keep seq-clustered files

@@ -165,7 +165,7 @@ def test_crash_retry_overwrites_partial_partition(spark, table, view):
     _merge(spark, table, [("I", "a", ts(1), 1, "en", 10)], 1)
     view.update(table, 1)
     # simulate a crash AFTER data files landed but BEFORE the marker:
-    os.remove(view._marker("1"))
+    os.remove(view._ledger.path("1"))
     with pytest.raises(ValueError):
         view.read()  # uncommitted partition is invisible
     assert view.update(table, 1)  # retry: dynamic overwrite + re-mark
@@ -185,6 +185,23 @@ def test_compact_folds_and_absorbs(spark, table, view):
     _merge(spark, table, [("D", "k0", ts(9), 99, None, None)], 3)
     view.update(table, 3)
     assert _as_dict(view.read()) == _as_dict(_full_recompute(table))
+
+
+def test_second_compact_keeps_first_compactions_batches(spark, table, view):
+    """A compaction absorbs transitively: after compact, update, compact
+    again, the batches the FIRST compaction absorbed must still read as
+    applied, so catch-up and re-delivery apply nothing twice."""
+    for b in range(5):
+        _merge(spark, table, [("I", f"k{b}", ts(1 + b), b, "en", 10)], b)
+        view.update(table, b)
+        if b in (2, 4):
+            assert view.compact()
+    assert view.update_all(table) == 0
+    assert _as_dict(view.read()) == _as_dict(_full_recompute(table)) == {
+        "en": (5, 50)
+    }
+    assert not view.update(table, 0)  # absorbed by the first compaction
+    assert _as_dict(view.read()) == {"en": (5, 50)}
 
 
 def test_load_reopens_identical_definition(spark, table, view, tmp_root):

@@ -210,12 +210,12 @@ def test_sync_transform_filters_and_enriches(spark, pair):
     assert got == {("a", "en", "EN")}  # b filtered, c deleted
 
 
-def test_sync_refuses_cow_then_rebuild_recovers(spark, pair):
+def test_sync_refuses_backfill_then_rebuild_recovers(spark, pair):
     up, down = pair
     c = Cascade(up, down)
-    up.merge(_df(spark, [("I", "a", ts(1), 1, "en")]), 1)
+    up.merge(_df(spark, [("I", "a", ts(1), 1, None)]), 1)
     c.sync()
-    up.merge(_df(spark, [("U", "a", ts(2), 2, "fr")]), 2, strategy="cow")
+    up.backfill("lang", F.lit("fr"), batch_id=2)
     with pytest.raises(ChangeLogUnavailableError):
         c.sync()
     c.rebuild()

@@ -113,17 +113,24 @@ def test_changes_across_schema_evolution_null_backfills_pre_side(spark, table):
     assert rows["b"]._change_type == "D" and rows["b"].mime is None
 
 
-def test_changes_spans_compaction_and_cow(spark, table):
+def test_changes_spans_compaction_and_overwrite(spark, table):
     v1, _ = _seed(spark, table)
     table.compact()
     _merge(spark, table, [("U", "a", ts(4), 40, "it")], 4)
-    table.merge(
-        spark.createDataFrame([("U", "d", ts(5), 50, "nl")], SCHEMA),
+    table.overwrite(
+        spark.createDataFrame(
+            [
+                ("U", "a", ts(4), 40, "it"),
+                ("U", "c", ts(1), 3, "fr"),
+                ("U", "d", ts(5), 50, "nl"),
+            ],
+            SCHEMA,
+        ),
         batch_id=5,
-        strategy="cow",
     )
     got = {r.url: r._change_type for r in table.changes(v1).collect()}
-    # d didn't exist at v1 → its insert+cow-update nets to I
+    # d didn't exist at v1 → its insert+overwrite nets to I; c kept its
+    # sequence through the overwrite, so it is unchanged
     assert got == {"a": "U", "b": "D", "d": "I"}
 
 
@@ -168,13 +175,10 @@ def test_change_log_range_slices(spark, table):
     assert all(r._commit_version == v2 for r in log)
 
 
-def test_change_log_refuses_cow_range_but_changes_works(spark, table):
+def test_change_log_refuses_backfill_range_but_changes_works(spark, table):
     v1, _ = _seed(spark, table)
-    table.merge(
-        spark.createDataFrame([("U", "d", ts(5), 50, "nl")], SCHEMA),
-        batch_id=5,
-        strategy="cow",
-    )
+    _merge(spark, table, [("U", "e", ts(5), 50, None)], 5)
+    table.backfill("lang", F.lit("nl"), batch_id=6)
     with pytest.raises(ChangeLogUnavailableError):
         table.change_log(v1)
     assert table.changes(v1).count() > 0  # snapshot diff always available
